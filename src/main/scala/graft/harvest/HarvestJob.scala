@@ -116,12 +116,15 @@ object HarvestJob {
     Store.writeTable(terms, cfg.storeDir, "terms")
     Store.writeTable(allFields, cfg.storeDir, "term_fields")
     Store.bootstrap(spark, cfg.storeDir)
-    cfg.sqliteArtifact.foreach(Store.writeSqliteArtifact(spark, cfg.storeDir, _))
 
     // terms/allFields are checkpointed, not cached — their blocks free via
-    // the ContextCleaner; only the cache()d frames need explicit release
+    // the ContextCleaner; only the cache()d frames need explicit release.
+    // Release them BEFORE the export: it re-reads the same store paths,
+    // and a cache entry still keyed on those paths would serve it the
+    // pre-merge rows.
     valid.unpersist()
     existingTerms.unpersist(); existingFields.unpersist()
+    cfg.sqliteArtifact.foreach(Store.writeSqliteArtifact(spark, cfg.storeDir, _))
 
     Result(bindingsRead, validRows, distinctTerms,
       termsInserted, termsUpdated, fieldsInserted, warnings)

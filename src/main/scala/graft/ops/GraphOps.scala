@@ -905,18 +905,13 @@ object GraphOps {
     * (vertex-sized) label table — at 100 TB a broadcast of labels or a
     * bucketed co-partitioning, never a shuffle of lineitem onto the
     * graph; the mart axis is community-bounded. */
-  def communityMartQuery(s: SparkSession, dir: String): DataFrame =
-    communityMartOn(strongEdges(s, dir), Tables.lineitem(s, dir))
-
-  /** The mart over an explicit edge set + lineitem frame — shared by the
-    * driver gate and the PROBE_STRESS_E06 scaling probe. */
-  def communityMartOn(edgeSet: DataFrame, lineitem: DataFrame): DataFrame = {
-    import edgeSet.sparkSession.implicits._
-    val labels = lpaOf(edgeSet, LpaRounds)
+  def communityMartQuery(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val labels = lpaOf(strongEdges(s, dir), LpaRounds)
       .select($"part_key".as("l_partkey"), $"community")
       .localCheckpoint(true)
     val sizes = labels.groupBy($"community").agg(count(lit(1)).as("n_members"))
-    val li = lineitem.select($"l_partkey",
+    val li = Tables.lineitem(s, dir).select($"l_partkey",
       ($"l_extendedprice".cast("decimal(12,2)") * 100).cast("long").as("cents"))
     val rev = li.join(labels, Seq("l_partkey"))
       .groupBy($"community")

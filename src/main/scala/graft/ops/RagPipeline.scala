@@ -32,14 +32,9 @@ object RagPipeline {
   val RetrieveK = 20
   val TokenBudget = 800
 
-  def ragRetrieval(s: SparkSession, dir: String): DataFrame =
-    ragRetrievalDocs(Tables.documents(s, dir))
-
-  /** The pipeline over any `(doc_id, text)` frame — the corpus-input
-    * seam the e02 scale probe replicates through. */
-  def ragRetrievalDocs(corpus: DataFrame): DataFrame = {
-    val s = corpus.sparkSession
+  def ragRetrieval(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val corpus = Tables.documents(s, dir)
     val retrieved = graft.text.TextAnalysis.bm25RankDocs(corpus, RetrieveK)
       .select($"query_id", $"rank", $"doc_id", $"score")
       // feeds candidate-pair gen (twice), the gram build's id filter, and

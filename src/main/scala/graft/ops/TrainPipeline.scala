@@ -44,15 +44,9 @@ import org.apache.spark.sql.functions._
 object TrainPipeline {
 
   def trainingBatches(s: SparkSession, dir: String,
-      numShards: Int = 4, capacity: Int = 512): DataFrame =
-    trainingBatchesDocs(Tables.documents(s, dir), numShards, capacity)
-
-  /** [[trainingBatches]] over any (doc_id, source, text) frame — the
-    * corpus-input seam the PROBE_STRESS_E04 scaling probe drives. */
-  def trainingBatchesDocs(docs: DataFrame,
       numShards: Int = 4, capacity: Int = 512): DataFrame = {
-    val s = docs.sparkSession
     import s.implicits._
+    val docs = Tables.documents(s, dir)
     // stage 1: per-source quota k = (3·n_total·sk) div (5·s_total)
     val quota = Relational2.temperatureShares(docs)
       .select($"source", expr("(3L * n_total * sk) div (5L * s_total)").as("k"))
