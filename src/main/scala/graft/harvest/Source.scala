@@ -1,15 +1,16 @@
 package graft.harvest
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Source layer.
   *
   * A1 — the reference fetches LIMIT/OFFSET pages sequentially
-  * (harvest.py:54-87,405-416); here each offset range becomes one Spark
-  * partition so pages fetch in parallel across executors.
-  * A2 — per-page retry with exponential backoff (harvest.py:144-158) runs
-  * inside the partition reader; Spark task retries are the backstop.
+  * (harvest.py:54-87,405-416); the `graft-bindings` DSv2 connector
+  * ([[graft.sources.BindingsPageSource]]) plans one input partition per
+  * page so pages fetch in parallel across executors.
+  * A2 — per-page retry with exponential backoff (harvest.py:144-158,
+  * [[withRetry]]) runs inside the connector's partition reader; Spark task
+  * retries are the backstop.
   *
   * File-based bindings (the portable path) are plain parquet/json reads
   * with the fixed bindings schema — no inference.
@@ -35,21 +36,6 @@ object Source {
       }
     }
     throw new IllegalStateException("unreachable")
-  }
-
-  /** A1: partition-parallel paginated scan. One input partition per offset
-    * range; `fetchPage(offset, limit)` runs on executors with retry.
-    * `fetchPage` must be serializable and side-effect-free per page.
-    */
-  def paginated(spark: SparkSession, totalCount: Long, pageSize: Int,
-                schema: StructType,
-                fetchPage: (Long, Int) => Seq[Row],
-                maxRetries: Int = 3, baseDelayMs: Long = 1000): DataFrame = {
-    val pages = spark.range(0, math.max(totalCount, 0), math.max(pageSize, 1))
-    val rows = pages.rdd.flatMap { offset =>
-      withRetry(maxRetries, baseDelayMs) { fetchPage(offset, pageSize) }
-    }
-    spark.createDataFrame(rows, schema)
   }
 
   /** Read a bindings file (parquet or json by extension) with the fixed

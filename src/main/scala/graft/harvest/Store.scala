@@ -231,15 +231,7 @@ object Store {
     * `sqlite_sequence` for AUTOINCREMENT). Driver-side and sequential by
     * design (a single file has no parallel write path); table rows stream
     * through `toLocalIterator`, and only index key tuples are buffered. */
-  def writeSqliteArtifact(spark: SparkSession, storeDir: String, dbPath: String): Unit =
-    writeSqliteArtifact(spark,
-      (name, schema) => readTableOr(spark, storeDir, name, schema), dbPath)
-
-  /** As above, with the table contents supplied directly (by declared
-    * schema) instead of read from a parquet store — lets callers export an
-    * artifact from in-flight DataFrames without a store round-trip. */
-  def writeSqliteArtifact(spark: SparkSession, read: (String, StructType) => DataFrame,
-                          dbPath: String): Unit = {
+  def writeSqliteArtifact(spark: SparkSession, storeDir: String, dbPath: String): Unit = {
     import org.apache.spark.sql.Row
     import scala.collection.mutable
 
@@ -265,7 +257,7 @@ object Store {
 
     def tableObj(name: String): Sqlite.TableData = {
       val schema = Schemas.allTables.toMap.apply(name)
-      val df = read(name, schema)
+      val df = readTableOr(spark, storeDir, name, schema)
       val hasId = schema.fieldNames.contains("id")
       // total order: by id where present (id becomes the rowid, preserving
       // the reference's AUTOINCREMENT numbering), else by first column

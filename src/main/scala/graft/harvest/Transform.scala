@@ -11,6 +11,10 @@ import org.apache.spark.sql.functions._
   */
 object Transform {
 
+  /** The SPARQL variables the reference's SELECT binds
+    * (harvest.py:74-79) — the default melt set. */
+  val boundVars: Seq[String] = Seq("prefLabel", "altLabel", "definition")
+
   /** A9 + A18 row predicate: a binding is valid when its concept is
     * present, non-empty, and a well-formed URI (harvest.py:321-323 + 28-51
     * applied row-level). Exposed so conditional counts (A16 stats) use the
@@ -51,7 +55,7 @@ object Transform {
     * @param wide one row per concept with columns named after SPARQL vars
     * @param vars which property columns to melt (must exist in `wide`)
     */
-  def melt(wide: DataFrame, vars: Seq[String] = Seq("prefLabel", "altLabel", "definition")): DataFrame = {
+  def melt(wide: DataFrame, vars: Seq[String] = boundVars): DataFrame = {
     val spark = wide.sparkSession
     val unpivoted = wide.unpivot(
       Array(col("concept")),
@@ -68,6 +72,6 @@ object Transform {
     * multi-valued properties (one row per value, H5 in SURVEY §7) each emit
     * an EAV row; dedup on the full EAV key afterwards. */
   def meltAll(bindings: DataFrame,
-              vars: Seq[String] = Seq("prefLabel", "altLabel", "definition")): DataFrame =
+              vars: Seq[String] = boundVars): DataFrame =
     melt(bindings, vars).dropDuplicates("concept", "field_uri", "original_value")
 }

@@ -240,47 +240,27 @@ object HarvestQueries {
   }
 
   /** A22/H4: the single-file SQLite artifact under the driver's oracle —
-    * run the FULL harvest job (fixture bindings → fresh store → artifact
-    * export), then read per-table row counts back THROUGH the .db file
-    * (table b-tree walks via [[Sqlite.readTable]]). The oracle recomputes
-    * the same counts from the fixture SQL, so a writer bug that drops or
-    * duplicates rows fails the driver gate, not only ScalaTest. */
+    * run the harvest merge core over the fixture bindings into a fresh
+    * store, export the artifact from it, then read per-table row counts
+    * back THROUGH the .db file (table b-tree walks via
+    * [[Sqlite.readTable]]). The oracle recomputes the same counts from the
+    * fixture SQL, so a writer bug that drops or duplicates rows fails the
+    * oracle gate, not only ScalaTest. */
   def sqliteArtifact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val work = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_a22_" + Integer.toHexString(dir.hashCode))
-    work.mkdirs()
+    val work = java.nio.file.Files.createTempDirectory("graft_a22_").toFile
     val db = new java.io.File(work, "translations.db")
-    db.delete()
-    // terms + term_fields straight from the fixture (the same derivation
-    // the job performs — assignIds + resolveFk + insertIfAbsent); the
-    // artifact is exported from the in-flight DataFrames, skipping the
-    // store round-trip (the full job → store → artifact path is covered by
-    // SqliteSpec's export tests — this query gates the WRITER under the
-    // driver's oracle without re-benchmarking the whole job)
-    // r17 (VERDICT r16 #5, guide §2.4): the fixture and the terms table
-    // each feed TWO consumers (terms export + the fields FK join; valid
-    // feeds terms + melt) — materialize once instead of re-deriving per
-    // consumer inside the writer's streaming pass.
-    val v = valid(s, dir).localCheckpoint(true)
-    val asOf = lit(ts1).cast("timestamp") // LTZ like Schemas.termFields
-    val terms = Merge.assignIds(v.select($"concept".as("uri")).distinct(), Seq("uri"), 1)
-      .select($"id", $"uri", asOf.as("created_at"), asOf.as("updated_at"))
-      .localCheckpoint(true)
-    val fields = Merge.insertIfAbsent(
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.harvest.Schemas.termFields),
-      Merge.resolveFk(Transform.meltAll(v), terms), asOf, startId = Some(1L))
-    val populated = Map("terms" -> terms, "term_fields" -> fields)
-    graft.harvest.Store.writeSqliteArtifact(s,
-      (name, schema) => populated.getOrElse(name,
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)),
-      db.getPath)
-    val rows = Schemas.allTables.map { case (name, _) =>
-      val read = Sqlite.readTable(db, name)
-      (name, read.size.toLong, if (read.isEmpty) 0L else read.map(_._1).max)
-    }
-    rows.toDF("tbl", "n_rows", "max_rowid").orderBy($"tbl")
+    try {
+      val store = new java.io.File(work, "store").getPath
+      HarvestJob.merge(bindings(s, dir).drop("doc_id"), store,
+        java.sql.Timestamp.valueOf(ts1))
+      graft.harvest.Store.writeSqliteArtifact(s, store, db.getPath)
+      val rows = Schemas.allTables.map { case (name, _) =>
+        val read = Sqlite.readTable(db, name)
+        (name, read.size.toLong, if (read.isEmpty) 0L else read.map(_._1).max)
+      }
+      rows.toDF("tbl", "n_rows", "max_rowid").orderBy($"tbl")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(work)
   }
 
   /** A19: CHECK-constraint violations on documents.lang vs the reference's

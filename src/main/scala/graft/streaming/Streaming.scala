@@ -943,66 +943,32 @@ object Streaming {
       }
   }
 
-  /** B10 + A21: incremental harvest as a streaming sink — each micro-batch
-    * of bindings runs the FULL per-page reference pipeline
-    * (harvest.py:358-374) against the store via the same batch Merge
-    * operators the one-shot [[graft.harvest.HarvestJob]] uses:
-    *
-    *   A11 terms upsert → A14 melt to EAV → A13 FK resolve against the
-    *   post-upsert terms → A15 insert-if-absent into `term_fields` →
-    *   A21 staged atomic swap of BOTH tables.
-    *
-    * Until r12 this sink ran only the A11 leg — a user running the
-    * incremental harvest in streaming mode silently got a terms-only
-    * store (r11 VERDICT #1). Now each trigger leaves the store exactly
-    * where the batch job would after harvesting the same page prefix;
-    * when batches arrive in URI-sorted order (the reference's paginated
-    * ORDER BY delivery, harvest.py:96) the streamed store is
-    * BIT-IDENTICAL to `HarvestJob.run` on the concatenated bindings,
-    * surrogate ids included — gated by `b10_stream_harvest` and pinned
-    * against the batch job in StreamingSpec. Out-of-order arrival keeps
-    * content parity and id density but, like the reference's
-    * AUTOINCREMENT under re-ordered pages, assigns ids in arrival order.
-    *
-    * Crash windows are content-idempotent: the at-least-once marker
-    * commits AFTER both table swaps, so a re-applied batch upserts
-    * already-merged terms (no-op) and anti-joins away already-inserted
-    * fields (no-op). The merged frames are eagerly cut from the store's
-    * parquet lineage (localCheckpoint) BEFORE the swap deletes the old
-    * files — the ledger prune discipline (BatchLedger scaladoc).
-    *
-    * Scale shape (r12; join forms verified empirically on Spark
-    * 4.1): per trigger, the A13 FK join
-    * (inner) broadcasts the O(batch) side — the store is scanned, not
-    * shuffled, in that leg; the A11 upsert (full outer — no broadcast
-    * form exists, both sides exchange even with a 10-row side) and the
-    * A15 anti-join (left anti with the STORE on the right — broadcast
-    * would have to ship the store, so past the AQE threshold it is
-    * SMJ) are each ONE store-keyed shuffle; and the A21 swap REWRITES
-    * both tables. The O(store) read + two key-shuffles + rewrite per
-    * trigger is BY DESIGN here: the reference-shaped store is one plain
-    * parquet dir per table, the analogue of the reference's single
-    * SQLite file (whose per-page transaction also rewrites shared
-    * b-tree pages in place). At 100 TB the store is a lakehouse table
-    * BUCKETED on the merge keys and this same per-trigger pipeline
-    * lands as a partition-pruned MERGE: the upsert's and anti-join's
-    * shuffles become bucket-local merges and the rewrite touches only
-    * buckets containing the batch's keys — the surrogate-id discipline
-    * already supports that (max-id is a footer-stats read; row_number
-    * orders only the new rows). EXECUTED, not narrated (r13, VERDICT
-    * r12 #1): BucketedLayoutSpec writes terms/term_fields bucketed on
-    * exactly these merge keys, feeds the UNMODIFIED A11/A15 operators,
-    * and pins the plans — the store side reads its HashPartitioning
-    * from the layout (zero ShuffleExchange above the bucketed scans),
-    * only the O(batch) side shuffles, results bit-equal to the
-    * path-based forms. */
-  /** Test seam (r12): fires after the merge computation, before the
-    * owner re-check that guards the table swaps — the window a
-    * successor's claim must be able to fence. Production no-op. */
+  /** Test seam: fires at each fence point of the merge (after the merge
+    * computation, then inside the swaps), before the owner re-check — the
+    * window a successor's claim must be able to fence. Production no-op. */
   private[streaming] var onBeforeHarvestSwap: () => Unit = () => ()
 
+  /** B10 + A21: incremental harvest as a streaming sink — each micro-batch
+    * of bindings runs the merge core [[graft.harvest.HarvestJob.merge]]
+    * against the store. When batches arrive in URI-sorted order (the
+    * reference's paginated ORDER BY delivery, harvest.py:96) the streamed
+    * store equals `HarvestJob.run` on the concatenated bindings, surrogate
+    * ids included; out-of-order arrival keeps content parity and id
+    * density but, like the reference's AUTOINCREMENT under re-ordered
+    * pages, assigns ids in arrival order (the batch job over the
+    * concatenated bindings gives the canonical ids).
+    *
+    * What the sink adds around the merge:
+    *  - an at-least-once marker (`_last_batch`), committed after both
+    *    table swaps, so a re-delivered batch skips without re-reading the
+    *    store; a crash before the marker re-applies the batch, which is
+    *    content-idempotent (upserted terms and anti-joined fields no-op);
+    *  - a store-epoch claim fencing zombie writers: the merge's staging
+    *    dirs carry the epoch tag, and the owner check runs as its fence
+    *    at every shared-path mutation, then once more before the marker;
+    *  - a sweep of superseded claims and crashed writers' staging dirs. */
   def harvestSink(storeDir: String, asOf: java.sql.Timestamp,
-      meltVars: Seq[String] = Seq("prefLabel", "altLabel", "definition"))(
+      meltVars: Seq[String] = graft.harvest.Transform.boundVars)(
       batch: DataFrame, batchId: Long): Unit = {
     // at-least-once guard (r11, VERDICT r10 #1), durable in the store dir
     // itself: a re-delivery after a clean commit skips without re-reading
@@ -1037,38 +1003,8 @@ object Streaming {
         s"harvest store fenced: epoch $epoch superseded by $n at $storeDir — " +
           "a newer writer owns this store (zombie driver)")
     }
-    val spark = batch.sparkSession
-    val valid = graft.harvest.Transform.filterValidBindings(batch.distinct())
-      .localCheckpoint(true) // reused by the upsert AND the melt leg
-    val existing = graft.harvest.Store.readTableOr(
-      spark, storeDir, "terms", graft.harvest.Schemas.terms)
-    // A11 — eager: the swap below deletes the old parquet this reads
-    val terms = graft.harvest.Merge.upsertTerms(
-      existing, valid.select(col("concept").as("uri")), lit(asOf))
-      .localCheckpoint(true)
-    // A14 → A13 → A15 against the post-upsert terms (harvest.py:358-372)
-    val melted = graft.harvest.Transform.meltAll(valid, meltVars)
-    val resolved = graft.harvest.Merge.resolveFk(melted, terms)
-    val existingFields = graft.harvest.Store.readTableOr(
-      spark, storeDir, "term_fields", graft.harvest.Schemas.termFields)
-    // r17 (guide §1.2): NO eager checkpoint — allFields has exactly one
-    // consumer (its own writeTable), whose STAGING write runs the
-    // derivation before any swap touches the term_fields files it reads
-    // (the terms swap above only moves the terms dir; `terms` itself is
-    // consumed from its checkpoint, not from files). The old checkpoint
-    // materialized the whole frame once just to copy it into staging —
-    // one full pass per trigger for nothing.
-    val allFields = graft.harvest.Merge.insertIfAbsent(
-      existingFields, resolved, lit(asOf))
-    // A21 — staged atomic swaps, the fence re-checked (with rollback) at
-    // every shared-path mutation inside writeTable, then the idempotence
-    // marker last
-    onBeforeHarvestSwap()
-    requireOwner()
-    graft.harvest.Store.writeTable(terms, storeDir, "terms",
-      s".e$epoch", requireOwner _)
-    graft.harvest.Store.writeTable(allFields, storeDir, "term_fields",
-      s".e$epoch", requireOwner _)
+    graft.harvest.HarvestJob.merge(batch, storeDir, asOf, meltVars, s".e$epoch",
+      () => { onBeforeHarvestSwap(); requireOwner() })
     requireOwner()
     val tmp = new java.io.File(storeDir, "._last_batch.tmp")
     java.nio.file.Files.write(tmp.toPath, batchId.toString.getBytes("UTF-8"))
@@ -1097,7 +1033,7 @@ object Streaming {
     // scale the fence is the commit-owner service's job, per the
     // BatchLedger trust note.)
     val storePath = new org.apache.hadoop.fs.Path(storeDir)
-    val storeFs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val storeFs = storePath.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
     // exists-guard (r14 ADVICE): the java.io.File#listFiles path this
     // replaced was null-tolerant when the store dir didn't exist yet
     // (sweep racing ahead of writeTable's first create); listStatus
@@ -1112,47 +1048,6 @@ object Streaming {
         case _ => ()
       }
     }
-  }
-
-  /** Optional ORDER-INSENSITIVE id mode for the streamed harvest (r13,
-    * VERDICT r12 #4): a compaction-time URI-sorted renumber — the A12
-    * surrogate discipline applied to the accumulated store — restoring
-    * BIT-parity with the one-shot batch job under ARBITRARY delivery
-    * order. The sink's default stays arrival-order ids (the reference's
-    * AUTOINCREMENT-under-reordered-pages semantics, stated in the
-    * harvestSink scaladoc); run this on the compaction cadence when id
-    * stability across delivery orders matters (a downstream diff against
-    * a batch-built store, a re-harvest reconciliation). Terms renumber
-    * dense by uri; term_fields remap the FK and renumber dense by the
-    * A15 key — exactly the ids the batch job assigns — with all
-    * timestamps preserved per natural key. Both tables swap through the
-    * A21 staged writer; inputs are eagerly cut first (the swap deletes
-    * the files they read). Like the batch job — and unlike the sink —
-    * this takes NO store-epoch claim, so quiesce the streaming query
-    * before running it (the compaction-window discipline); a renumber
-    * racing a live trigger would interleave two unfenced writers.
-    * Pinned in StreamingSpec: shuffled delivery + renumber ==
-    * HarvestJob.run bit-for-bit, both tables. */
-  def renumberHarvestStore(spark: SparkSession, storeDir: String): Unit = {
-    val terms = graft.harvest.Store.readTableOr(
-      spark, storeDir, "terms", graft.harvest.Schemas.terms).localCheckpoint(true)
-    val fields = graft.harvest.Store.readTableOr(
-      spark, storeDir, "term_fields", graft.harvest.Schemas.termFields)
-      .localCheckpoint(true)
-    val newTerms = graft.harvest.Merge.assignIds(terms.drop("id"), Seq("uri"), 1L)
-      .localCheckpoint(true)
-    val mapped = fields.drop("id")
-      .join(terms.select(col("id").as("term_id"), col("uri")), Seq("term_id"))
-      .drop("term_id")
-      .join(newTerms.select(col("id").as("term_id"), col("uri")), Seq("uri"))
-      .drop("uri")
-    val newFields = graft.harvest.Merge.assignIds(
-        mapped, Seq("term_id", "field_uri", "original_value"), 1L)
-      .select(col("id"), col("term_id"), col("field_uri"), col("field_term"),
-        col("original_value"), col("created_at"), col("updated_at"))
-      .localCheckpoint(true)
-    graft.harvest.Store.writeTable(newTerms, storeDir, "terms")
-    graft.harvest.Store.writeTable(newFields, storeDir, "term_fields")
   }
 
   /** w08 streaming twin (r7, r6-verdict #8): iterative graph algorithms
@@ -2168,16 +2063,12 @@ object Streaming {
     * arrive through a real MemoryStream in three URI-SORTED micro-batches
     * (leading-digit ranges of doc_id — lexicographically ordered like the
     * reference's paginated ORDER BY delivery, harvest.py:96); each trigger
-    * stream-static-joins its keys to the bindings fixture and runs the
-    * FULL per-page pipeline ([[harvestSink]]: A11 upsert → A14 melt →
-    * A13 FK resolve → A15 insert-if-absent → A21 staged swaps). The last
+    * stream-static-joins its keys to the bindings fixture and runs
+    * [[harvestSink]], i.e. the batch job's merge core. The last
     * batch is then RE-DELIVERED (store-marker no-op, inside the compared
     * path) and the store is SERVED as terms ⟕ term_fields — which must
     * hash-match DuckDB's one-shot replay of the batch pipeline over ALL
-    * bindings, surrogate ids included. Under sorted arrival the streamed
-    * store is bit-identical to `HarvestJob.run` on the concatenated
-    * bindings (also pinned directly in StreamingSpec), so the streamed
-    * and batch harvests can never drift apart silently. */
+    * bindings, surrogate ids included. */
   def streamHarvestQuery(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

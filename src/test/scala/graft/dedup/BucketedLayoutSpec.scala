@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *     (same SQL family as b12_cross_portable); this spec adds the
   *     in-process cross-check.
   *
-  *  2. The harvest store (`Streaming.harvestSink` scaladoc: "at 100 TB
+  *  2. The harvest store (`HarvestJob.merge` scaladoc: "at 100 TB
   *     the store is a lakehouse table BUCKETED on the merge keys and the
   *     upsert's and anti-join's shuffles become bucket-local merges"):
   *     the terms/term_fields tables written bucketed on their merge keys

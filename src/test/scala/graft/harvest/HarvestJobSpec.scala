@@ -66,6 +66,29 @@ class HarvestJobSpec extends SparkSpec {
     assert(dbTerms.forall(_._2(3) == Sqlite.VText("2026-02-01 00:00:00")))
   }
 
+  test("merge core releases its caches when a swap is fenced") {
+    val dir = Files.createTempDirectory("graft_store").toString
+    val bindings = s"$dir/bindings.parquet"
+    writeBindings(bindings)
+    HarvestJob.run(spark, HarvestJob.Config(
+      "http://vocab.nerc.ac.uk/collection/P01/current/", bindings, dir,
+      Timestamp.valueOf("2026-01-01 00:00:00")))
+    // fence the first check of the term_fields swap, after terms swapped
+    val fenced = new IllegalStateException("fenced")
+    val e = intercept[IllegalStateException] {
+      HarvestJob.merge(Source.readBindings(spark, bindings), dir,
+        Timestamp.valueOf("2026-02-01 00:00:00"),
+        fence = () => if (new java.io.File(dir, "_staging_term_fields").exists()) throw fenced)
+    }
+    assert(e eq fenced)
+    // no cache entry keyed on the store paths outlives the failed merge
+    assert(spark.read.parquet(s"$dir/terms").storageLevel ===
+      org.apache.spark.storage.StorageLevel.NONE)
+    assert(spark.read.parquet(s"$dir/term_fields").storageLevel ===
+      org.apache.spark.storage.StorageLevel.NONE)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   test("invalid collection URI fails fast (A18/A25)") {
     intercept[IllegalArgumentException] {
       HarvestJob.run(spark, HarvestJob.Config("notauri", "/nonexistent", "/tmp/x",

@@ -1,34 +1,8 @@
 package graft.harvest
 
 import graft.SparkSpec
-import org.apache.spark.sql.Row
-import java.util.concurrent.ConcurrentHashMap
-
-/** Flaky in-memory page server: fails the FIRST attempt for every odd page
-  * with a transient error (the reference's HTTP-502 case, harvest.py:150).
-  * JVM-static so executor threads in local mode share it. */
-object FlakyPages {
-  val attempts = new ConcurrentHashMap[Long, Integer]()
-  val total = 25
-  def fetch(offset: Long, limit: Int): Seq[Row] = {
-    val n = attempts.merge(offset, 1, (a, b) => a + b)
-    if ((offset / limit) % 2 == 1 && n == 1)
-      throw new Source.TransientFetchException(s"502 at offset $offset")
-    (offset until math.min(offset + limit, total.toLong)).map(i =>
-      Row(s"https://v.example/t/$i", s"label $i", null, null))
-  }
-}
 
 class SourceSpec extends SparkSpec {
-
-  test("paginated source fetches all pages in parallel with retry (A1/A2)") {
-    FlakyPages.attempts.clear()
-    val df = Source.paginated(spark, FlakyPages.total, 10, Schemas.bindings,
-      FlakyPages.fetch, maxRetries = 3, baseDelayMs = 1)
-    assert(df.count() === 25)
-    assert(df.rdd.getNumPartitions >= 1)
-    assert(FlakyPages.attempts.get(10L) === 2) // odd page retried exactly once
-  }
 
   test("retry gives up after maxRetries (A2)") {
     var calls = 0

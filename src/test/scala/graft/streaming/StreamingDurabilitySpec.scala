@@ -234,6 +234,35 @@ class StreamingDurabilitySpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
+  test("harvest sink enforces terms.uri uniqueness: a store with a duplicate " +
+    "uri fails the trigger, tables and marker unmoved") {
+    val dir = tmpDir("harvest_unique")
+    val mk = (uris: Seq[String]) => uris.toDF("concept")
+      .select(col("concept"), lit("label").as("prefLabel"),
+        lit(null).cast("string").as("altLabel"), lit(null).cast("string").as("definition"))
+    val asOf = Timestamp.valueOf("2026-01-01 00:00:00")
+    Streaming.harvestSink(dir, asOf)(mk(Seq("https://v.example/t/a")), 0L)
+    // plant a second terms row for the same uri
+    val terms = spark.read.parquet(s"$dir/terms")
+    terms.unionByName(terms.withColumn("id", col("id") + 1))
+      .write.parquet(s"$dir/_planted")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir, "terms"))
+    assert(new java.io.File(dir, "_planted").renameTo(new java.io.File(dir, "terms")))
+    def table(name: String) = spark.read.parquet(s"$dir/$name").collect()
+      .map(_.toSeq).sortBy(_.toString).toSeq
+    val (terms0, fields0) = (table("terms"), table("term_fields"))
+    assert(terms0.size === 2 && fields0.size === 1)
+    val e = intercept[IllegalStateException] {
+      Streaming.harvestSink(dir, asOf)(mk(Seq("https://v.example/t/b")), 1L)
+    }
+    assert(e.getMessage.contains("constraint violation (terms.uri unique)"))
+    assert(table("terms") === terms0)
+    assert(table("term_fields") === fields0)
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/_last_batch")), "UTF-8").trim === "0")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
   // ---- restart: recover-from-ledger == never-restarted --------------------
 
   test("restart: BandIndexRefresh recovers segments + compact marker from the " +

@@ -664,18 +664,6 @@ class StreamingSpec extends SparkSpec {
     val oooIds = spark.read.parquet(s"$oooDir/terms").select("id")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(oooIds === (1L to oooIds.length).toSeq, "ids not dense under out-of-order arrival")
-    // r13 (VERDICT r12 #4): the OPTIONAL order-insensitive id mode — a
-    // compaction-time uri-sorted renumber restores BIT-parity with the
-    // batch job under the shuffled delivery above (both tables, ids AND
-    // timestamps), while the sink default stays arrival-order
-    Streaming.renumberHarvestStore(spark, oooDir)
-    assert(table(oooDir, "terms") === table(s"$batchDir/store", "terms"))
-    assert(table(oooDir, "term_fields") === table(s"$batchDir/store", "term_fields"))
-    // and the renumber is IDEMPOTENT — on an already-canonical store
-    // (the sorted-delivery one, bit-equal to batch) it is the identity
-    Streaming.renumberHarvestStore(spark, sortedDir)
-    assert(table(sortedDir, "terms") === table(s"$batchDir/store", "terms"))
-    assert(table(sortedDir, "term_fields") === table(s"$batchDir/store", "term_fields"))
     } finally Seq(batchDir, sortedDir, oooDir).foreach(d =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
   }
